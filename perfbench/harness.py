@@ -1,15 +1,19 @@
 """Measurement helpers shared by the workloads.
 
 Everything here times or counts from outside the program: wall-clock
-spans around calls into the package's public functions, Spark job
-groups the benchmark sets itself, and the Spark status store (stage
-and task metrics the driver keeps whether or not the UI is on).
+spans around calls into the package's public functions, the machine's
+busy CPU time read from /proc/stat, Spark job groups the
+benchmark sets itself, and the Spark status store (stage and task
+metrics the driver keeps whether or not the UI is on). The run also
+starts and stops its processes through here, so that none outlives it.
 """
 
 from __future__ import annotations
 
 import contextlib
+import ctypes
 import os
+import signal
 import statistics
 import time
 from collections import defaultdict
@@ -60,13 +64,17 @@ class Ops:
 @contextlib.contextmanager
 def stopwatch() -> Iterator[list[float]]:
     """The one timing helper: ``with stopwatch() as t: ...`` leaves the
-    elapsed seconds in ``t[0]``, also when the body raises."""
-    box = [0.0]
+    elapsed wall-clock seconds in ``t[0]`` and the busy CPU seconds of
+    the machine meanwhile (``busy_cpu_s``) in ``t[1]``, also when the
+    body raises."""
+    box = [0.0, 0.0]
+    c0 = busy_cpu_s()
     t0 = time.perf_counter()
     try:
         yield box
     finally:
         box[0] = time.perf_counter() - t0
+        box[1] = busy_cpu_s() - c0
 
 
 class Tracer:
@@ -213,6 +221,106 @@ def dir_stats(path: str) -> tuple[int, int]:
                 files += n.endswith(".parquet")
                 size += os.path.getsize(os.path.join(root, n))
     return files, size
+
+
+# -- processes the run starts ------------------------------------------
+
+
+def become_subreaper() -> bool:
+    """Make this process the parent of every orphaned descendant (the
+    Python workers of a Spark JVM that has exited), so that
+    ``stop_children`` can wait for each of them. Linux only; returns
+    False where the call is not available."""
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        return libc.prctl(36, 1, 0, 0, 0) == 0  # PR_SET_CHILD_SUBREAPER
+    except (OSError, AttributeError):
+        return False
+
+
+def _proc_stats() -> dict[int, list[str]]:
+    """The fields of /proc/<pid>/stat after the command name, per
+    process (field 3 of proc(5) is index 0); empty where there is no
+    /proc."""
+    out: dict[int, list[str]] = {}
+    for entry in os.listdir("/proc") if os.path.isdir("/proc") else []:
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as f:
+                    out[int(entry)] = f.read().rsplit(")", 1)[1].split()
+            except (OSError, IndexError):
+                pass  # ended while we looked
+    return out
+
+
+def _descendants(stats: dict[int, list[str]], pid: int) -> list[int]:
+    children: dict[int, list[int]] = defaultdict(list)
+    for child, fields in stats.items():
+        children[int(fields[1])].append(child)
+    out: list[int] = []
+    todo = [pid]
+    while todo:
+        for child in children.get(todo.pop(), []):
+            todo.append(child)
+            out.append(child)
+    return out
+
+
+def live_descendants(pid: int) -> list[int]:
+    """Every process below ``pid`` in the process tree that has not
+    ended (zombies have ended)."""
+    stats = _proc_stats()
+    return [p for p in _descendants(stats, pid) if stats[p][0] != "Z"]
+
+
+def busy_cpu_s() -> float:
+    """CPU seconds this machine's CPUs have been busy since boot: user,
+    nice, system, irq and softirq time from /proc/stat (0 where there
+    is no /proc). Time the hypervisor stole is counted apart there and
+    is not in it; per-process CPU times are not used because the
+    kernel scales them to a run time that does include stolen time."""
+    try:
+        with open("/proc/stat") as f:
+            fields = [int(v) for v in f.readline().split()[1:8]]
+    except OSError:
+        return 0.0
+    user, nice, system, _idle, _iowait, irq, softirq = fields
+    return (user + nice + system + irq + softirq) / os.sysconf("SC_CLK_TCK")
+
+
+def stop_children(grace_s: float = 30.0) -> None:
+    """Return only when every process this one started, and every
+    process those started, has ended and no child is left unreaped.
+    Whatever still runs after ``grace_s`` is sent SIGKILL."""
+    deadline = time.monotonic() + grace_s
+    while True:
+        live = live_descendants(os.getpid())
+        with contextlib.suppress(ChildProcessError):
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        if not live:
+            return
+        if time.monotonic() > deadline:
+            for pid in live:
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, signal.SIGKILL)
+        time.sleep(0.05)
+
+
+def stop_spark_jvm(spark) -> None:
+    """Stop the session and end its JVM: the py4j gateway server exits
+    when its standard input closes. ``stop_children`` then waits for
+    it and its Python workers. Never raises: a stop that fails (say on
+    a gateway connection a signal broke mid-call) still ends the JVM."""
+    from pyspark import SparkContext
+
+    if spark is not None:
+        with contextlib.suppress(Exception):
+            spark.stop()
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None and proc.stdin is not None:
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
 
 
 def head_commit(root: str) -> str:

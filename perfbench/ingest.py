@@ -227,6 +227,7 @@ class IngestWorkload:
             self._check_backfill(wh, n_backfill, n_replay, ops)
 
             cycle_s: list[float] = []
+            cycle_cpu_s = 0.0
             for c in range(CYCLES):
                 client.advance(CYCLE_SLOTS)
                 tip = client.tip
@@ -241,6 +242,7 @@ class IngestWorkload:
                     ops.record(False, f"cycle {c}: {exc!r}")
                     continue
                 cycle_s.append(t_cycle[0])
+                cycle_cpu_s += t_cycle[1]
                 self._check_cycle(wh, c, tip, n_new, ops)
 
         files, _ = dir_stats(wh.events_path)
@@ -250,6 +252,7 @@ class IngestWorkload:
 
         out = {
             "pass_s": t_backfill[0] + t_replay[0] + sum(cycle_s),
+            "cpu_s": t_backfill[1] + t_replay[1] + cycle_cpu_s,
             "backfill_events_per_s": n_backfill / t_backfill[0],
             "replay_s": t_replay[0],
             "freshness_p50_s": median(cycle_s) if cycle_s else 0.0,

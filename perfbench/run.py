@@ -16,13 +16,21 @@ Output on stdout: one JSON line recording the run (workload, seed,
 cores, commit, effective session confs), then, as the last line, the
 result ``{"correct", "attempted", "failed", "metrics"}``.
 
-- ``--trace 0``: the end-to-end metrics ``setup_s`` (process start to
-  ready to measure) and ``pass_s`` (median over the run's passes of
-  one pass's time).
+- ``--trace 0``: the end-to-end metrics ``setup_s`` (the CPU seconds
+  from start to ready to measure) and ``pass_cpu_s`` (median over the
+  run's passes of the CPU seconds one pass costs). CPU seconds are
+  the time the machine's CPUs were busy (``harness.busy_cpu_s``), with
+  the run the only load on the machine. Both are CPU time, not wall
+  clock, because on a shared host the hypervisor takes the CPUs away
+  for minutes at a time: on 4 vCPUs, as the time stolen per suite run
+  went from 2 s to 65 s, its pass read 51 to 87 s of wall clock but
+  141 to 185 CPU seconds. The wall-clock set-up and pass times go to
+  stderr.
 - ``--trace 1``: one traced pass -- spans around calls into each
   layer, a Spark job group per phase, stage/task totals from the
-  status store -- reported as the per-layer metrics. ``trace.pass_s``
-  is that pass's time (compare it with the untraced ``pass_s`` for
+  status store -- reported as the per-layer metrics, wall clock.
+  ``trace.pass_s`` and ``trace.pass_cpu_s`` are that pass's wall and
+  CPU time (compare the latter with the untraced ``pass_cpu_s`` for
   the whole tracing cost); ``trace.overhead_s`` is the time the
   instrumentation itself spent inside it. Metrics of layers a
   workload does not use read 0.
@@ -30,7 +38,9 @@ result ``{"correct", "attempted", "failed", "metrics"}``.
 Everything a run writes (Spark local dirs, temp files, warehouses,
 artifact caches) lives under ``.perfbench_work/<pid>`` in the checkout
 and is removed before exit; only the DuckDB oracle digests are kept,
-in ``.perfbench_cache/``, for the next run in the same checkout. Exit
+in ``.perfbench_cache/``, for the next run in the same checkout. The
+Spark JVM and every process below it have ended before the run exits,
+also when it fails or receives SIGTERM. Exit
 status 2, without a result line, when the checkout does not hold the
 package.
 """
@@ -42,6 +52,7 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import sys
 import tempfile
 import time
@@ -72,7 +83,7 @@ def per_layer_names() -> list[str]:
         names += [f"{prefix}.construct_s", f"{prefix}.execute_s", f"{prefix}.construct_jobs", f"{prefix}.execute_jobs"]
     names += ["spark.stages", "spark.tasks", "spark.executor_run_s", "spark.shuffle_write_bytes", "spark.spill_bytes"]
     names += ["backfill_events_per_s", "replay_s", "freshness_p50_s", "suite_s", "heavy5_s", "failed_frac"]
-    names += ["trace.pass_s", "trace.overhead_s", "trace.unattributed_frac"]
+    names += ["trace.pass_s", "trace.pass_cpu_s", "trace.overhead_s", "trace.unattributed_frac"]
     return names
 
 
@@ -154,6 +165,12 @@ def _layer_metrics(workload: str, tracer, result: dict) -> dict[str, float]:
 
 def main(argv: list[str] | None = None) -> int:
     t_start = time.perf_counter()
+    # the checkout root, not this directory, is the import root
+    sys.path[0] = ROOT
+    from perfbench.harness import (JobGroups, Ops, Tracer, become_subreaper, busy_cpu_s, head_commit, median,
+                                   stage_metrics, stop_children, stop_spark_jvm, stopwatch)
+
+    cpu_start = busy_cpu_s()
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
@@ -167,8 +184,6 @@ def main(argv: list[str] | None = None) -> int:
         print("perfbench: this checkout does not hold the package, its driver entry and the benchmark tables",
               file=sys.stderr)
         return 2
-    # the checkout root, not this directory, is the import root
-    sys.path[0] = ROOT
     try:
         import duckdb  # noqa: F401  (the oracle engine)
         import pyspark  # noqa: F401
@@ -176,8 +191,18 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: {exc}", file=sys.stderr)
         return 2
 
-    from perfbench.harness import JobGroups, Ops, Tracer, head_commit, median, stage_metrics, stopwatch
+    # every process the run starts ends before it exits, on every way out
+    become_subreaper()
+    terminated: list[int] = []
 
+    def on_sigterm(signum, _frame):
+        # SystemExit raised inside a py4j call can surface as another
+        # error that a workload counts and goes past; the flag keeps a
+        # terminated run from printing a result
+        terminated.append(signum)
+        sys.exit(128 + signum)
+
+    signal.signal(signal.SIGTERM, on_sigterm)
     workdir = os.path.join(ROOT, ".perfbench_work", str(os.getpid()))
     os.makedirs(workdir, exist_ok=True)
     spark = None
@@ -202,8 +227,9 @@ def main(argv: list[str] | None = None) -> int:
                                   "trace": args.trace, "nproc": cores, "commit": head_commit(ROOT),
                                   "python": sys.version.split()[0], "pyspark": pyspark.__version__,
                                   "inputs": wl.describe(), "session_confs": _session_confs(spark)}}), flush=True)
-        setup_s = time.perf_counter() - t_start
-        print(f"perfbench: session {t_session[0]:.2f} s, set-up {setup_s:.2f} s", file=sys.stderr)
+        setup_s = busy_cpu_s() - cpu_start
+        print(f"perfbench: session {t_session[0]:.2f} s, set-up {time.perf_counter() - t_start:.2f} s "
+              f"({setup_s:.2f} CPU s)", file=sys.stderr)
 
         ops = Ops()
         sc = spark.sparkContext
@@ -219,7 +245,7 @@ def main(argv: list[str] | None = None) -> int:
                 break
 
         if not args.trace:
-            metrics = {"setup_s": setup_s, "pass_s": median([p["pass_s"] for p in passes])}
+            metrics = {"setup_s": setup_s, "pass_cpu_s": median([p["cpu_s"] for p in passes])}
         else:
             traced = passes[0]
             metrics = dict.fromkeys(per_layer_names(), 0)
@@ -229,6 +255,7 @@ def main(argv: list[str] | None = None) -> int:
             metrics["session.start_s"] = t_session[0]
             metrics["failed_frac"] = ops.failed_frac
             metrics["trace.pass_s"] = traced["pass_s"]
+            metrics["trace.pass_cpu_s"] = traced["cpu_s"]
             metrics["trace.overhead_s"] = groups.overhead_s + tracer.overhead_s
         for err in ops.errors:
             print(f"perfbench: failed: {err}", file=sys.stderr)
@@ -238,14 +265,17 @@ def main(argv: list[str] | None = None) -> int:
             "failed": ops.failed,
             "metrics": {k: {"value": v, "unit": unit_of(k)} for k, v in metrics.items()},
         }
+        if terminated:
+            return 128 + terminated[0]
         print(json.dumps(result), flush=True)
         return 0
     except Exception:
         traceback.print_exc()
-        return 1
+        return 128 + terminated[0] if terminated else 1
     finally:
-        if spark is not None:
-            spark.stop()
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)  # let the clean-up finish
+        stop_spark_jvm(spark)
+        stop_children()
         shutil.rmtree(workdir, ignore_errors=True)
         try:
             os.rmdir(os.path.dirname(workdir))

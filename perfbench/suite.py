@@ -37,19 +37,30 @@ FAMILIES = ("dedup", "similarity", "text", "multimodal", "corpus", "analytics")
 BUILD_DOMINATED = (
     "semdedup_exact_first", "semdedup_near_dup", "bpe_train", "bpe_encode", "knn_ivf_mrl",
     "knn_ivf_materialized", "delta_containment_exposure", "shard_manifest",
+)#: Entries also left out, so that the 4 + 22 x 2 runs of a benchmark
+#: check fit in its time limit on a contended host: those whose median
+#: first call took under 0.6 s over 18 passes at sf0.001 on 4 cores
+#: (most of that is the shared first-call cost that lands on whichever
+#: entry comes first), and simhash_near_dup_wide, the operator of
+#: simhash_near_dup with a wider key. cumulative_new_users and
+#: sketch_rollup (rows-only check) stay, so the analytics family is
+#: still timed.
+LIGHT_OR_TWIN = (
+    "pack_boundaries", "media_stats", "denoising_spans", "sales_rollup", "rollup_exact_users",
+    "stratified_holdout", "length_buckets", "canary_registry", "simhash_near_dup_wide",
 )
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")
 
 
 def entries() -> list[str]:
-    """DRIVER_ORDER without BUILD_DOMINATED and without the entries of
-    the analytics and dimension registries: their plans
+    """DRIVER_ORDER without BUILD_DOMINATED, LIGHT_OR_TWIN and the
+    entries of the analytics and dimension registries: their plans
     (``plans.analytics``, ``plans.dimensions``) are the ones the ingest
     workload's refresh times."""
     from solana_data_etl_pipeline_spark.plans import suite as S
 
-    timed_by_ingest = set(S.ANALYTICS_QUERIES) | set(S.DIMENSION_QUERIES)
-    return [n for n in S.DRIVER_ORDER if n not in BUILD_DOMINATED and n not in timed_by_ingest]
+    left_out = set(BUILD_DOMINATED) | set(LIGHT_OR_TWIN) | set(S.ANALYTICS_QUERIES) | set(S.DIMENSION_QUERIES)
+    return [n for n in S.DRIVER_ORDER if n not in left_out]
 
 
 def seeded_order(names: list[str], seed: int) -> list[str]:
@@ -176,9 +187,10 @@ class SuiteWorkload:
         per: dict[str, tuple[float, float]] = {}
         digests: dict[str, tuple[int, str]] = {}
         errors: dict[str, str] = {}
+        cpu_s = 0.0
         for name in self.order:
             before = persistent_rdd_ids(sc)
-            tc = te = [0.0]
+            tc = te = [0.0, 0.0]
             try:
                 with stopwatch() as tc, groups.group(f"{name}:construct"), tracer.span("suite.construct"):
                     df = self.queries[name](self.spark, self.sf_dir)
@@ -190,6 +202,7 @@ class SuiteWorkload:
             finally:
                 drop_new_rdds(sc, before)
             per[name] = (tc[0], te[0])
+            cpu_s += tc[1] + te[1]
 
         with stopwatch() as t_oracle:
             oracle = cached_oracle_digests(self.cache_dir, self.sf_dir, self.oracle_sql, self.order)
@@ -207,7 +220,7 @@ class SuiteWorkload:
             ops.record(not problem, f"{name}: {problem}")
 
         suite_s = sum(c + e for c, e in per.values())
-        out = {"pass_s": suite_s, "suite_s": suite_s, "heavy5_s": sum(sum(per[n]) for n in HEAVY5 if n in per),
+        out = {"pass_s": suite_s, "cpu_s": cpu_s, "suite_s": suite_s, "heavy5_s": sum(sum(per[n]) for n in HEAVY5 if n in per),
                "oracle_s": t_oracle[0], "entries": {n: [round(c, 3), round(e, 3)] for n, (c, e) in per.items()}}
         if tracer.enabled:
             def block(prefix: str, names: list[str]) -> dict:

@@ -6,7 +6,11 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import statistics
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -119,3 +123,43 @@ def test_seeded_order_is_a_seed_stable_permutation():
     a, b = seeded_order(names, 5), seeded_order(names, 5)
     assert a == b and sorted(a) == sorted(names)
     assert seeded_order(names, 6) != a
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc"), reason="reads the process tree from /proc")
+def test_stop_children_ends_orphaned_grandchildren():
+    # in a process of its own, so no other child of the test runner is touched
+    script = textwrap.dedent(
+        """
+        import os, subprocess, time
+        from perfbench.harness import become_subreaper, live_descendants, stop_children
+
+        assert become_subreaper()
+        # the shell exits at once and leaves its sleep behind, as a JVM leaves its workers
+        subprocess.Popen(["sh", "-c", "sleep 60 & exit 0"])
+        subprocess.Popen(["sleep", "0.2"])
+        time.sleep(0.5)
+        assert live_descendants(os.getpid()), "the orphan was not reparented here"
+        t0 = time.monotonic()
+        stop_children(grace_s=0.5)
+        assert live_descendants(os.getpid()) == []
+        try:
+            os.waitpid(-1, os.WNOHANG)
+            raise AssertionError("a child was left unreaped")
+        except ChildProcessError:
+            pass
+        print(round(time.monotonic() - t0, 1))
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    out = subprocess.run([sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    assert float(out.stdout) < 10
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc"), reason="reads CPU times from /proc")
+def test_stopwatch_counts_busy_cpu_of_other_processes():
+    burn = "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.5: pass"
+    with harness.stopwatch() as t:
+        subprocess.run([sys.executable, "-c", burn], check=True)
+    assert t[1] >= 0.4  # the child's CPU time
+    assert t[0] >= 0.4
