@@ -16,16 +16,14 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply engine session conventions to a driver-provided session."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # coalesce post-shuffle partitions by bytes, not core count (see
-    # session.py -- measured r14 win on the small-shuffle queries at
-    # both 8 and 32 cores; scale-adaptive: the advisory byte target
-    # keeps corpus-scale shuffles wide)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Apply the engine's SQL confs (session.ENGINE_CONFS, all
+    runtime-settable) to a driver-provided session, so the driver's
+    plain session runs under the same confs as get_spark's."""
+    from solana_data_etl_pipeline_spark.session import ENGINE_CONFS
+
+    for key, value in ENGINE_CONFS.items():
+        if key.startswith("spark.sql."):
+            spark.conf.set(key, value)
     return spark
 
 

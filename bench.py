@@ -56,7 +56,7 @@ def main() -> None:
     )
     warm.groupBy("rn").agg(F.sum("h")).write.format("noop").mode("overwrite").save()
 
-    from solana_data_etl_pipeline_spark.plans.suite import DRIVER_ORDER
+    from solana_data_etl_pipeline_spark.plans.suite import DRIVER_ORDER, built_artifacts
 
     # NOTE on cross-entry interference (the r9-r11 "drift >30% on
     # untouched code" class): entries late in DRIVER_ORDER measure a
@@ -73,15 +73,15 @@ def main() -> None:
     # (or standalone) before attributing drift to code.
     #
     # r12 ADDITION -- the fix that DOES work: one untimed warm pass
-    # over the window first. It (a) builds every per-sf ingest
-    # artifact (semdedup keeper layouts, bm25 postings, LSH bucket
-    # index, BPE vocab, cluster membership -- their cold costs are
-    # the *_build twins below, so the timed loop should measure the
-    # PROBE shape the registry documents, not smear one-time builds
-    # into first samples) and (b) pays expression JIT once; then ONE
-    # SparkContext restart clears the accumulated executor state the
-    # builds leave behind (localCheckpoint blocks, shuffle files --
-    # the drag class above) while the JVM's codegen cache survives.
+    # over the window first. It (a) builds every stored layout the
+    # window probes (protocol.amortized_layouts; their cold costs
+    # are the *_build twins below, so the timed loop should measure
+    # the PROBE shape the registry documents, not smear one-time
+    # builds into first samples) and (b) pays expression JIT once;
+    # then ONE SparkContext restart clears the accumulated executor
+    # state the builds leave behind (localCheckpoint blocks, shuffle
+    # files -- the drag class above) while the JVM's codegen cache
+    # survives.
     # Unlike the per-entry System.gc()/gc.collect() attempts, the
     # restart happens OUTSIDE any timed region, exactly once.
     # SPARK_GRAFT_BENCH_RAW=1 disables the warm pass + restart (the
@@ -95,6 +95,7 @@ def main() -> None:
         spark = get_spark("bench-window")
         spark.sparkContext.setLogLevel("ERROR")
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    amortized_layouts = built_artifacts(sf_dir)
 
     # r14 window hygiene (VERDICT r13 #3/#5): several queries
     # localCheckpoint intermediates (curation train, dsir buckets, CC
@@ -104,15 +105,15 @@ def main() -> None:
     # Drop them with an explicit BLOCKING unpersist after each timed
     # sample, OUTSIDE the timed region (unlike the reverted
     # gc.collect() attempt, whose ASYNC ContextCleaner deletions then
-    # contended inside the next sample's timed region). Every
-    # per-query checkpoint is sample-local -- the per-sf layout caches
-    # hold PATHS, not frames -- so nothing long-lived is dropped; the
-    # timed loop itself is byte-identical to r12/r13.
-    def _drop_sample_blocks(sess) -> None:
+    # contended inside the next sample's timed region). Only the RDDs
+    # a sample persisted are dropped (ids snapshotted before it), so a
+    # frame something cached earlier stays cached; the timed loop
+    # itself is byte-identical to r12/r13.
+    from perfbench.harness import drop_new_rdds, persistent_rdd_ids
+
+    def _drop_sample_blocks(sess, before: set[int]) -> None:
         try:
-            jmap = sess.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jmap.values():
-                jrdd.unpersist(True)
+            drop_new_rdds(sess.sparkContext, before)
         except Exception:
             pass  # hygiene must never fail the bench
 
@@ -121,188 +122,46 @@ def main() -> None:
         fn = qs[name]
         samples = []
         for _ in range(RUNS):
+            before = persistent_rdd_ids(spark.sparkContext)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             # noop sink materializes every column (count() would let
             # Catalyst prune the computed expressions and under-measure)
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            _drop_sample_blocks(spark)
+            _drop_sample_blocks(spark, before)
         timings[name] = round(statistics.median(samples), 3)
 
-    # non-graded baselines: the deliberately-unregistered quadratic
-    # twins, timed the same way so the LSH/IVF cost/recall trade keeps
-    # numbers on BOTH sides round-over-round (they are excluded from
-    # the headline total -- they exist to be beaten)
-    from solana_data_etl_pipeline_spark.plans.suite import all_queries
+    # non-graded baselines, excluded from the headline total. The
+    # deliberately-unregistered quadratic twins keep the LSH/IVF
+    # cost/recall trade numbered on BOTH sides round-over-round (they
+    # exist to be beaten); every stored layout in plans.suite.ARTIFACTS
+    # is built once per process and probed by the timed entries, so
+    # its COLD build into a fresh directory is priced here as
+    # `{name}_build` and the amortization hides nothing.
+    import shutil
+    import tempfile
+
+    from solana_data_etl_pipeline_spark.plans.suite import ARTIFACTS, all_queries
+
+    def _median_s(run) -> float:
+        samples = []
+        for _ in range(RUNS):
+            d = tempfile.mkdtemp(prefix="bench_twin_")
+            t0 = time.perf_counter()
+            run(d)
+            samples.append(time.perf_counter() - t0)
+            shutil.rmtree(d, ignore_errors=True)
+        return round(statistics.median(samples), 3)
 
     full = all_queries()
     twins: dict[str, float] = {}
     for name in ("knn_bruteforce", "dedup_ngram_jaccard"):
-        if name not in full:
-            continue
-        samples = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            full[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        twins[name] = round(statistics.median(samples), 3)
-
-    # the materialized-IVF layout is cached per sf_dir (build happens
-    # at ingest cadence, probes amortize it), so the BUILD cost is
-    # timed explicitly here instead of being smeared into the
-    # knn_ivf_materialized query samples
-    import shutil
-    import tempfile
-
-    from solana_data_etl_pipeline_spark.operators.similarity import materialize_ivf
-    from solana_data_etl_pipeline_spark.plans.suite import load_table as _lt
-
-    _emb = _lt(spark, sf_dir, "embeddings")
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="ivf_build_bench_")
-        t0 = time.perf_counter()
-        materialize_ivf(_emb, d, cell_col="label")
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["ivf_build"] = round(statistics.median(samples), 3)
-
-    # the residual-PQ codes and the cluster-curation membership are
-    # likewise ingest-time artifacts (the suite entries probe per-sf
-    # stored layouts, the _ivf_layout stance) -- their COLD build
-    # costs are timed explicitly here so the amortization hides
-    # nothing
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        lloyd_cells as _lc_build,
-        reconstructed_pq_residual as _rpr_build,
-    )
-    from solana_data_etl_pipeline_spark.operators.text import hash_embed as _he_build
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="pq_build_bench_")
-        t0 = time.perf_counter()
-        _rpr_build(_emb).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["pq_build"] = round(statistics.median(samples), 3)
-
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        reconstructed_int8 as _ri8_build,
-    )
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="int8_build_bench_")
-        t0 = time.perf_counter()
-        _lc_build(_ri8_build(_emb)).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["int8_build"] = round(statistics.median(samples), 3)
-
-    # the MRL (truncated-prefix) rung's cold fit+write (VERDICT r12
-    # #6: the suite entry now probes the per-sf stored 16-dim layout
-    # like its int8/PQ siblings; this twin prices the amortization)
-    from solana_data_etl_pipeline_spark.operators.similarity import _dvec as _dv_build
-    from solana_data_etl_pipeline_spark.plans.suite import MRL_DIM as _MRL_DIM
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="mrl_build_bench_")
-        t0 = time.perf_counter()
-        _lc_build(
-            _emb.select(
-                "vec_id",
-                F.slice(_dv_build(F.col("embedding")), 1, _MRL_DIM).alias("embedding"),
-            ),
-            dim=_MRL_DIM,
-        ).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["mrl_build"] = round(statistics.median(samples), 3)
-
-    _docs_build = _lt(spark, sf_dir, "documents")
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="cluster_fit_bench_")
-        t0 = time.perf_counter()
-        _lc_build(_he_build(_docs_build)).select(
-            F.col("vec_id").alias("doc_id"), "cell"
-        ).write.mode("overwrite").parquet(d)
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["cluster_fit_build"] = round(statistics.median(samples), 3)
-
-    # the trained-BPE artifact (merges + per-word piece counts) the
-    # suite's bpe_train/bpe_encode entries probe is likewise built
-    # once per process (_bpe_layout_dir) -- its cold 8-round training
-    # cost is timed here so the amortization hides nothing
-    from solana_data_etl_pipeline_spark.operators.text import _bpe_loop as _bpe_build
-
-    samples = []
-    for _ in range(RUNS):
-        d = tempfile.mkdtemp(prefix="bpe_build_bench_")
-        t0 = time.perf_counter()
-        _m, _s = _bpe_build(_docs_build, n_merges=8)
-        _m.write.mode("overwrite").parquet(f"{d}/merges")
-        _s.select("w", F.size("s").cast("long").alias("n_pieces")).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/vocab")
-        samples.append(time.perf_counter() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    twins["bpe_train_build"] = round(statistics.median(samples), 3)
-
-    # the stored text-retrieval layouts the indexed entries probe --
-    # the 256-way-pfx bm25 postings and the (table, bucket)-partitioned
-    # LSH bucket directory (r14) -- are ingest-cadence artifacts built
-    # by the warm pass; their cold build+write costs are priced here
-    # so the amortization hides nothing (VERDICT r13 #4)
-    from solana_data_etl_pipeline_spark.operators.similarity import (
-        materialize_lsh_rows as _mlr_build,
-    )
-    from solana_data_etl_pipeline_spark.operators.text import (
-        materialize_inverted_index as _mii_build,
-    )
-
-    for tag, build in (
-        ("bm25_index_build", lambda d: _mii_build(_docs_build, d)),
-        ("lsh_index_build", lambda d: _mlr_build(_he_build(_docs_build), d)),
-    ):
-        samples = []
-        for _ in range(RUNS):
-            d = tempfile.mkdtemp(prefix=f"{tag}_bench_")
-            t0 = time.perf_counter()
-            build(d)
-            samples.append(time.perf_counter() - t0)
-            shutil.rmtree(d, ignore_errors=True)
-        twins[tag] = round(statistics.median(samples), 3)
-
-    # the semdedup keeper layouts the suite entries probe are likewise
-    # ingest-cadence artifacts (dedup runs once per corpus snapshot;
-    # consumers read keepers) -- their cold computation+write costs
-    # are timed here so the amortization hides nothing. The ladder
-    # composition's build is measured beside the plain form's: the
-    # exact stage's extra groupBy is the price of replica immunity
-    # (SCALE.md round-12: 21.3x -> 1.21x under 10x replicas).
-    from solana_data_etl_pipeline_spark.operators.dedup import (
-        semdedup_exact_first as _sef_build,
-        semdedup_keepers_multiprobe as _smp_build,
-    )
-
-    _emb_sd = _lt(spark, sf_dir, "embeddings")
-    for tag, build in (
-        ("semdedup_build", lambda: _smp_build(_emb_sd, threshold=0.5, nprobe=3)),
-        ("semdedup_exact_first_build", lambda: _sef_build(_emb_sd, threshold=0.5, nprobe=3)),
-    ):
-        samples = []
-        for _ in range(RUNS):
-            d = tempfile.mkdtemp(prefix="semdedup_build_bench_")
-            t0 = time.perf_counter()
-            build().write.mode("overwrite").parquet(d)
-            samples.append(time.perf_counter() - t0)
-            shutil.rmtree(d, ignore_errors=True)
-        twins[tag] = round(statistics.median(samples), 3)
+        twins[name] = _median_s(
+            lambda _d: full[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        )
+    for name, build in ARTIFACTS.items():
+        twins[f"{name}_build"] = _median_s(lambda d: build(spark, sf_dir, d))
 
     # measured recall of the approximate plans against their exact
     # twins (non-graded, like the twin timings): turns the analytic
@@ -781,9 +640,9 @@ def main() -> None:
     from solana_data_etl_pipeline_spark.operators.dedup import (
         delta_embedding_dedup as _ded,
     )
-    from solana_data_etl_pipeline_spark.plans.suite import _delta_embedding_index
+    from solana_data_etl_pipeline_spark.plans.suite import artifact
 
-    _eidx = _delta_embedding_index(spark, sf_dir)
+    _eidx = artifact(spark, sf_dir, "emb_lsh_index")
     rng2 = np.random.default_rng(43)
     rows2 = []
     for r in emb_tbl.filter(F.col("vec_id") % 10 != 7).orderBy("vec_id").limit(50).collect():
@@ -831,14 +690,16 @@ def main() -> None:
     standalone_warm: dict[str, float] = {}
     for name in heavy5:
         fn = qs[name]
+        before = persistent_rdd_ids(spark.sparkContext)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        _drop_sample_blocks(spark)
+        _drop_sample_blocks(spark, before)
         samples = []
         for _ in range(RUNS):
+            before = persistent_rdd_ids(spark.sparkContext)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            _drop_sample_blocks(spark)
+            _drop_sample_blocks(spark, before)
         standalone_warm[name] = round(statistics.median(samples), 3)
 
     total = round(sum(timings.values()), 3)
@@ -849,21 +710,12 @@ def main() -> None:
     # 56.5 s (SCALE.md ladder) -- so the artifact itself must say
     # which protocol produced it, keeping cross-round totals
     # comparable without reading SCALE.md. amortized_layouts lists
-    # the per-sf ingest artifacts the warm pass builds (their cold
-    # costs are the *_build twins in baseline_twins).
+    # the stored layouts the warm pass built (their cold costs are
+    # the *_build twins in baseline_twins).
     protocol = {
         "warm_pass": not raw_protocol,
         "context_restart": not raw_protocol,
-        "amortized_layouts": [
-            "semdedup_keepers",
-            "semdedup_exact_first",
-            "bm25_postings",
-            "text_lsh_buckets",
-            "bpe_vocab",
-            "cluster_membership",
-            "ivf_cells",
-            "mrl_cells",
-        ],
+        "amortized_layouts": amortized_layouts,
     }
     # Full payload first (tools/solobench.py captures complete stdout
     # and picks the LONGEST JSON line), then a compact summary as the

@@ -1110,7 +1110,11 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
 
 
 def _cc_lazy_driver_labels(
-    pairs: DataFrame, src_col: str, dst_col: str, checkpoint: bool = True
+    pairs: DataFrame,
+    src_col: str,
+    dst_col: str,
+    driver_threshold: int,
+    checkpoint: bool = True,
 ) -> DataFrame:
     """The driver tier's union-find as a LAZY single-task kernel: the
     pair list repartitions to one task (one exchange of <=100k narrow
@@ -1135,10 +1139,16 @@ def _cc_lazy_driver_labels(
     connected_components: planning the checkpoint's physical plan at
     construction costs ~0.8 s of driver time for the minhash tree
     (measured r14: dedup_clusters 2.68 -> 1.85 s), bought for nothing
-    when the labels feed exactly one downstream operator."""
+    when the labels feed exactly one downstream operator.
+
+    The one task has a ceiling: past 2 x `driver_threshold` raw pairs
+    (the cached count went stale, or the pair list carries heavy
+    duplication) it raises instead of funnelling an unbounded edge
+    list through one task."""
     import pandas as pd
 
     dt = pairs.schema[src_col].dataType
+    ceiling = 2 * driver_threshold
 
     def run(batches):
         edges = []
@@ -1147,6 +1157,14 @@ def _cc_lazy_driver_labels(
             if dtype is None and pdf.shape[1]:
                 dtype = pdf.dtypes.iloc[0]
             edges.extend(zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()))
+            if len(edges) > ceiling:
+                raise RuntimeError(
+                    f"connected_components: the lazy single-task tier collected "
+                    f"{len(edges)} pairs, over its ceiling of {ceiling}; the "
+                    f"_CC_TIER_CACHE count for this pair plan is stale (its "
+                    f"source changed in place) or the pairs are heavily "
+                    f"duplicated -- clear _CC_TIER_CACHE or dedupe the pairs"
+                )
         out = _union_find_labels(edges)
         if out:
             import numpy as np
@@ -1174,7 +1192,11 @@ def _cc_lazy_driver_labels(
 #: decided before the shape is chosen), repeat constructions of the
 #: SAME plan skip the eager job and, under the driver threshold, take
 #: the lazy in-task kernel. Holds one integer per plan -- a sizing
-#: diagnostic, never rows or results.
+#: diagnostic, never rows or results. The key is the PLAN, not the
+#: data: it assumes a plan's sources do not change in place while the
+#: process runs. A source overwritten at the same path keeps its key;
+#: the lazy kernel's ceiling turns such a stale count into an error
+#: rather than an unbounded single task.
 _CC_TIER_CACHE: dict[tuple, int] = {}
 
 
@@ -1248,7 +1270,7 @@ def connected_components(
     n_cached = _CC_TIER_CACHE.get(tier_key)
     if n_cached is not None and n_cached <= _driver_threshold:
         return _cc_lazy_driver_labels(
-            pairs, src_col, dst_col, checkpoint=labels_checkpoint
+            pairs, src_col, dst_col, _driver_threshold, checkpoint=labels_checkpoint
         )
     edges = (
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))

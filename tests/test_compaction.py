@@ -216,3 +216,47 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     assert D.embedding_index_tables(spark, path) == 2
     after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
     assert after == before
+
+
+def test_compact_lsh_index_preserves_probes_tiny(spark, tmp_path):
+    """Fast form of the test above: one appended batch of small files
+    over a 12-vector index; compaction keeps every bucket row, the
+    geometry meta and the probe verdicts."""
+    from pyspark.sql import functions as F
+
+    from solana_data_etl_pipeline_spark.operators import dedup as D
+    from solana_data_etl_pipeline_spark.operators.similarity import (
+        LSH_PLANES,
+        _dvec,
+        norm_expr,
+        table_bucket_col,
+    )
+    from solana_data_etl_pipeline_spark.sinks.compaction import compact_lsh_index
+
+    path = str(tmp_path / "eidx")
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame(
+        [(i, [float((i + j) % 7) for j in range(8)]) for i in range(12)], schema
+    )
+    D.materialize_embedding_lsh(emb, path, n_tables=2, max_bucket=8)
+    extra = spark.createDataFrame(
+        [(100 + i, [float((i * 3 + j) % 5) for j in range(8)]) for i in range(4)], schema
+    )
+    extra.select(
+        F.col("vec_id"),
+        _dvec(F.col("embedding")).alias("v"),
+        norm_expr(F.col("embedding")).alias("n"),
+        F.posexplode(table_bucket_col(F.col("embedding"), LSH_PLANES, 2)).alias("table", "bucket"),
+    ).write.mode("append").parquet(f"{path}/buckets")
+    batch = spark.createDataFrame(
+        [(900, [float(j % 7) for j in range(8)]), (901, [9.0] * 8)], schema
+    )
+    before = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
+    n_rows = spark.read.parquet(f"{path}/buckets").count()
+
+    summary = compact_lsh_index(spark, path)
+    assert summary["buckets"]["after_files"] < summary["buckets"]["before_files"]
+    assert spark.read.parquet(f"{path}/buckets").count() == n_rows
+    assert D.embedding_index_tables(spark, path) == 2
+    after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
+    assert after == before

@@ -424,6 +424,40 @@ def test_connected_components_three_tiers_identical_labels(spark):
     assert {r.id: r.cluster_id for r in lazy.collect()} == maps["driver"]
 
 
+def test_connected_components_tiers_identical_labels_tiny(spark):
+    """Fast form of the three-tier equivalence above, on a 7-edge graph
+    with a chain, a merge and a lone pair: driver, broadcast, shuffle
+    and the cached lazy tier all return the same min-id labels."""
+    edges = [(1, 2), (2, 3), (3, 4), (9, 4), (10, 11), (20, 21), (21, 9)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    expect = {n: 1 for n in (1, 2, 3, 4, 9, 20, 21)} | {10: 10, 11: 10}
+    for kw in ({}, {"_driver_threshold": 0}, {"_driver_threshold": 0, "_broadcast_threshold": 0}):
+        got = {r.id: r.cluster_id for r in D.connected_components(pairs, **kw).collect()}
+        assert got == expect, kw
+    # the first call cached the tier decision: this one is the lazy kernel
+    lazy = D.connected_components(pairs)
+    assert {r.id: r.cluster_id for r in lazy.collect()} == expect
+
+
+def test_connected_components_lazy_tier_fails_loudly_past_ceiling(spark, tmp_path):
+    """_CC_TIER_CACHE keys on the plan, so a pair source overwritten at
+    the same path keeps its stale small count and routes the grown
+    edge list to the single-task kernel; past 2 x the driver threshold
+    that kernel must raise, not return labels."""
+    path = str(tmp_path / "pairs")
+    schema = "doc_a long, doc_b long"
+    spark.createDataFrame([(1, 2), (2, 3)], schema).write.parquet(path)
+    small = D.connected_components(spark.read.parquet(path), _driver_threshold=4)
+    assert len(small.collect()) == 3  # 4 symmetrized edges, cached
+
+    spark.createDataFrame([(i, i + 1) for i in range(20)], schema).write.mode(
+        "overwrite"
+    ).parquet(path)
+    grown = D.connected_components(spark.read.parquet(path), _driver_threshold=4)
+    with pytest.raises(Exception, match="_CC_TIER_CACHE"):
+        grown.collect()
+
+
 def test_keep_representatives_by_score(spark):
     """Quality-aware keepers: the highest-scored member wins its
     component (ties: smallest id); unclustered docs always survive."""

@@ -2039,6 +2039,32 @@ def test_hybrid_rank_indexed_identical_to_scan_form(spark, tmp_path):
     assert scan == stored and scan  # identical, non-vacuous
 
 
+def test_hybrid_rank_indexed_entry_matches_scan_entry_tiny(spark, tmp_path):
+    """Fast form of the test above, through the registry: on a 12-doc
+    corpus the hybrid_rank_indexed entry, whose two members read the
+    stored bm25_index and lsh_index layouts through artifact(),
+    returns exactly the scan-form hybrid_rank entry's rows."""
+    from solana_data_etl_pipeline_spark.plans.suite import all_queries
+
+    rows = [
+        (i, ("spark window " if i % 2 else "merge query ") + f"w{i}a w{i}b w{i}c", "en", "s", 30)
+        for i in range(12)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    qs = all_queries()
+
+    def ranked(name):
+        return [
+            (r.doc_id, r.lex_rank, r.sem_rank, r.rrf_score)
+            for r in qs[name](spark, str(tmp_path)).collect()
+        ]
+
+    scan = ranked("hybrid_rank")
+    assert scan == ranked("hybrid_rank_indexed") and scan  # identical, non-vacuous
+
+
 def test_oov_rate_hand_model(spark):
     """Coverage against a planted vocabulary: with vocab_size=2 the
     top-2 tokens by (freq desc, token asc) are in-vocab and everything
