@@ -1,4 +1,5 @@
-"""Error taxonomy. Parity with reference src/error.rs:5-30."""
+"""Error taxonomy: the variants of the reference's src/error.rs:5-30
+that this engine raises."""
 
 from __future__ import annotations
 
@@ -11,29 +12,6 @@ class RpcError(ETLError):
     pass
 
 
-class DatabaseError(ETLError):
-    pass
-
-
-class ParseError(ETLError):
-    pass
-
-
 class ConfigError(ETLError):
     pass
 
-
-class IOError_(ETLError):
-    pass
-
-
-class JsonError(ETLError):
-    pass
-
-
-class HttpError(ETLError):
-    pass
-
-
-class GenericError(ETLError):
-    pass

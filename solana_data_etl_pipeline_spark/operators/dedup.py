@@ -21,10 +21,10 @@ Hash: h(s) = first 60 bits of md5(s), as a signed long (always >= 0).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from solana_data_etl_pipeline_spark.operators.util import index_meta, write_index_meta
 
 MINHASH_HASHES = 16
 MINHASH_BANDS = 4
@@ -92,13 +92,6 @@ def shingles_from_tokens(tk: Column | str, n: int = SHINGLE_N) -> Column:
     # oracle's out-of-range list indexing semantics
     grams = F.transform(idx, lambda i: F.concat_ws(" ", *[F.try_element_at(tk, i + j + 1) for j in range(n)]))
     return F.array_distinct(grams)
-
-
-def shingles_col(text_col: str = "text", n: int = SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles of the normalized text. Prefer the
-    tokens_col + shingles_from_tokens two-step in performance paths
-    (see shingles_from_tokens docstring)."""
-    return shingles_from_tokens(tokens_col(text_col), n)
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -563,8 +556,8 @@ def materialize_minhash(
         )
     b.write.mode("overwrite").parquet(f"{path}/bands")
     _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # the index self-describes its banding scheme (minhash_index_scheme)
-    write_minhash_index_meta(df.sparkSession, path, num_hashes, bands)
+    # the index self-describes its banding scheme (delta_match_pairs)
+    write_index_meta(df.sparkSession, path, num_hashes=num_hashes, bands=bands)
 
 
 def delta_match_pairs(
@@ -593,9 +586,13 @@ def delta_match_pairs(
     touches only candidate pairs. The index verify join reads
     `{path}/shingles` instead of corpus text -- the index is
     self-contained."""
-    # the INDEX defines the banding scheme; the parameters are only
-    # the fallback for an index that does not exist yet
-    num_hashes, bands = minhash_index_scheme(spark, index_path, num_hashes, bands)
+    # the INDEX defines the banding scheme (a probe at any other one
+    # computes disjoint band_sigs and silently matches nothing); the
+    # parameters are only the fallback for an index that does not
+    # exist yet
+    meta = index_meta(spark, index_path)
+    if meta is not None:
+        num_hashes, bands = meta["num_hashes"], meta["bands"]
     rows = num_hashes // bands
     idx_bands = spark.read.parquet(f"{index_path}/bands")
     idx_sh = spark.read.parquet(f"{index_path}/shingles")
@@ -1605,8 +1602,8 @@ def materialize_winnow(
     excluded.write.mode("overwrite").parquet(f"{path}/excluded")
     fp.write.mode("overwrite").parquet(f"{path}/fingerprints")
     _shingle_sets(df, text_col).write.mode("overwrite").parquet(f"{path}/shingles")
-    # the index self-describes its winnowing scheme (winnow_index_scheme)
-    write_winnow_index_meta(df.sparkSession, path, k, window)
+    # the index self-describes its winnowing scheme (delta_containment)
+    write_index_meta(df.sparkSession, path, k=k, window=window)
 
 
 def delta_containment(
@@ -1646,9 +1643,13 @@ def delta_containment(
     query does exactly that with the cap mirrored in its oracle."""
     from solana_data_etl_pipeline_spark.operators.text import winnow_fingerprints
 
-    # the INDEX defines the winnowing scheme; the parameters are only
-    # the fallback for a pre-meta index
-    k, window = winnow_index_scheme(spark, index_path, k, window)
+    # the INDEX defines the winnowing scheme (a probe at any other
+    # k-gram size or window produces disjoint fingerprints); the
+    # parameters are only the fallback for an index that does not
+    # exist yet
+    meta = index_meta(spark, index_path)
+    if meta is not None:
+        k, window = meta["k"], meta["window"]
     idx_fp = spark.read.parquet(f"{index_path}/fingerprints")
     idx_sh = spark.read.parquet(f"{index_path}/shingles")
     d_fp = winnow_fingerprints(delta, k=k, window=window, text_col=text_col)
@@ -1712,7 +1713,9 @@ def delta_containment_exposure(
 
     excluded = spark.read.parquet(f"{index_path}/excluded")
     # the INDEX defines the winnowing scheme (see delta_containment)
-    k, window = winnow_index_scheme(spark, index_path, k, window)
+    meta = index_meta(spark, index_path)
+    if meta is not None:
+        k, window = meta["k"], meta["window"]
     d_fp = winnow_fingerprints(delta, k=k, window=window, text_col=text_col)
     totals = d_fp.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fps")
@@ -1975,117 +1978,6 @@ def embedding_near_dup_lsh(
 EMBED_INDEX_TABLES = 6
 
 
-def embedding_index_tables(spark, index_path: str, default: int = EMBED_INDEX_TABLES) -> int:
-    """Resolve the table count a materialized embedding index was
-    BUILT with -- the index defines the probe geometry, so every
-    probe (delta_embedding_dedup / delta_embedding_exposure / the
-    streaming semantic gate) derives n_tables from here instead of
-    trusting its caller to pass the matching value: probe tables
-    beyond the index's silently never match (measured: a 6-table
-    probe of a 2-table index keeps the 2-table 0.72 recall while the
-    docstrings promise 0.98). Reads `{path}/meta` (written at build);
-    for a pre-meta legacy index, infers max(table)+1 from the bucket
-    rows; falls back to `default` only when the index does not exist
-    yet."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        return int(spark.read.parquet(f"{index_path}/meta").first()["n_tables"])
-    except AnalysisException:
-        pass
-    try:
-        m = spark.read.parquet(f"{index_path}/buckets").agg(F.max("table")).first()[0]
-    except AnalysisException:
-        return default
-    return default if m is None else int(m) + 1
-
-
-def minhash_index_scheme(
-    spark,
-    index_path: str,
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = MINHASH_BANDS,
-) -> tuple[int, int]:
-    """Resolve the (num_hashes, bands) scheme a materialized minhash
-    index was BUILT with -- the banding scheme defines band_sig, so a
-    probe at any other scheme produces disjoint signatures and SILENT
-    zero matches (worse than the embedding-family mismatch, which at
-    least kept the shared tables). Reads `{path}/meta`; a pre-meta
-    legacy index infers bands = max(band)+1 with the repo-wide
-    rows-per-band (MINHASH_ROWS) -- an ASSUMPTION the band rows cannot
-    confirm (they carry only the banded hash, not the signature), so
-    the inference is logged loudly: a legacy index built at a
-    non-default rows-per-band would otherwise resolve to a wrong
-    num_hashes and the probe would silently match nothing. Falls back
-    to the arguments only when the index does not exist yet."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        r = spark.read.parquet(f"{index_path}/meta").first()
-        return int(r["num_hashes"]), int(r["bands"])
-    except AnalysisException:
-        pass
-    try:
-        m = spark.read.parquet(f"{index_path}/bands").agg(F.max("band")).first()[0]
-    except AnalysisException:
-        return num_hashes, bands
-    if m is None:
-        return num_hashes, bands
-    inferred = int(m) + 1
-    logging.getLogger(__name__).warning(
-        "minhash index %s has no meta table; inferring scheme "
-        "(num_hashes=%d, bands=%d) by ASSUMING the repo-default %d "
-        "rows per band. If the index was built at a different "
-        "rows-per-band the probe will silently match nothing -- "
-        "rebuild the index or write_minhash_index_meta() the true "
-        "scheme.",
-        index_path,
-        inferred * MINHASH_ROWS,
-        inferred,
-        MINHASH_ROWS,
-    )
-    return inferred * MINHASH_ROWS, inferred
-
-
-def write_minhash_index_meta(spark, index_path: str, num_hashes: int, bands: int) -> None:
-    """Persist the index's banding scheme (see minhash_index_scheme)."""
-    spark.createDataFrame(
-        [(int(num_hashes), int(bands))], "num_hashes long, bands long"
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
-
-
-def winnow_index_scheme(
-    spark, index_path: str, k: int = 5, window: int = 4
-) -> tuple[int, int]:
-    """Resolve the (k, window) winnowing scheme a materialized
-    containment index was BUILT with: a probe at a different k-gram
-    size or window produces disjoint fingerprints and silent zero
-    matches. Reads `{path}/meta`; fingerprint rows carry no inferable
-    geometry, so a pre-meta legacy index falls back to the arguments
-    (the historical defaults)."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        r = spark.read.parquet(f"{index_path}/meta").first()
-        return int(r["k"]), int(r["window"])
-    except AnalysisException:
-        return k, window
-
-
-def write_winnow_index_meta(spark, index_path: str, k: int, window: int) -> None:
-    """Persist the index's winnowing scheme (see winnow_index_scheme)."""
-    spark.createDataFrame([(int(k), int(window))], "k long, window long").write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/meta")
-
-
-def write_embedding_index_meta(spark, index_path: str, n_tables: int) -> None:
-    """Persist the index's build geometry (see embedding_index_tables)."""
-    spark.createDataFrame([(int(n_tables),)], "n_tables long").write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/meta")
-
-
 def materialize_embedding_lsh(
     emb_df: DataFrame,
     path: str,
@@ -2132,8 +2024,8 @@ def materialize_embedding_lsh(
     # blindness (delta_embedding_exposure)
     excluded.write.mode("overwrite").parquet(f"{path}/excluded")
     v.write.mode("overwrite").parquet(f"{path}/buckets")
-    # the index self-describes its probe geometry (embedding_index_tables)
-    write_embedding_index_meta(emb_df.sparkSession, path, n_tables)
+    # the index self-describes its probe geometry (delta_embedding_dedup)
+    write_index_meta(emb_df.sparkSession, path, n_tables=n_tables)
 
 
 def delta_embedding_exposure(
@@ -2167,7 +2059,9 @@ def delta_embedding_exposure(
     excluded = spark.read.parquet(f"{index_path}/excluded")
     # the INDEX defines the probe geometry; the parameter is only the
     # fallback for an index that does not exist yet
-    n_tables = embedding_index_tables(spark, index_path, n_tables)
+    meta = index_meta(spark, index_path)
+    if meta is not None:
+        n_tables = meta["n_tables"]
     buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     d = delta.select(
         F.col("vec_id").alias("delta_id"),
@@ -2238,7 +2132,9 @@ def delta_embedding_dedup(
     idx = spark.read.parquet(f"{index_path}/buckets")
     # the INDEX defines the probe geometry; the parameter is only the
     # fallback for an index that does not exist yet
-    n_tables = embedding_index_tables(spark, index_path, n_tables)
+    meta = index_meta(spark, index_path)
+    if meta is not None:
+        n_tables = meta["n_tables"]
     buckets = table_bucket_col("embedding", LSH_PLANES, n_tables)
     d = delta.select(
         F.col("vec_id"),

@@ -32,10 +32,6 @@ def tokens_col(text: str | Column = "text") -> Column:
     return F.split(F.trim(F.lower(c)), r"\s+")
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("tokens", tokens_col(text_col))
-
-
 def token_counts(df: DataFrame) -> DataFrame:
     """Per-document token count (whitespace tokenizer)."""
     return df.select(
@@ -604,7 +600,7 @@ def hybrid_rank_indexed(
     hash_embed corpus vectors (`lsh_index`: the PATH of -- or the
     exploded (vec_id, c_emb, c_norm, table, bucket) rows from -- the
     parquet similarity.materialize_lsh_rows writes once at ingest
-    cadence; passing the path engages the `_lsh_meta` build-parameter
+    cadence; passing the path engages the index_meta build-parameter
     pinning, ADVICE r12) instead of re-encoding and re-bucketing the
     corpus per query.
     Result-identical to hybrid_rank on the same corpus: parquet

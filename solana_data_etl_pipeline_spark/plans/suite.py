@@ -900,7 +900,7 @@ TEXT_QUERIES: dict[str, QueryFn] = {
         lambda spark, sf_dir: X.hybrid_rank_indexed(
             spark,
             artifact(spark, sf_dir, "bm25_index"),
-            # the PATH, not pre-read rows: engages the _lsh_meta
+            # the PATH, not pre-read rows: engages the index_meta
             # build-parameter pinning (ADVICE r12)
             artifact(spark, sf_dir, "lsh_index"),
             _BM25_TERMS,

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from solana_data_etl_pipeline_spark.operators import text as X
+from solana_data_etl_pipeline_spark.operators.util import index_meta, write_index_meta
 from solana_data_etl_pipeline_spark.plans.corpus import (
     MIN_ALPHA_RATIO,
     MIN_TOKENS,
@@ -477,9 +478,9 @@ def run_document_stream(
     def _embed_bucket_rows(vecs: DataFrame, n_tables: int) -> DataFrame:
         """materialize_embedding_lsh's index-row projection over
         hashed document vectors: (vec_id, v, n, table, bucket).
-        `n_tables` is the INDEX's resolved geometry (see
-        embedding_index_tables): appends at any other count would
-        leave older vectors reachable through fewer tables."""
+        `n_tables` is the INDEX's recorded geometry (index_meta):
+        appends at any other count would leave older vectors
+        reachable through fewer tables."""
         from solana_data_etl_pipeline_spark.operators.similarity import (
             LSH_PLANES,
             _dvec,
@@ -594,7 +595,8 @@ def run_document_stream(
             todo = corpus_now.join(have, "doc_id", "left_anti")
         else:
             todo = corpus_now
-        n_tables = D.embedding_index_tables(spark, semantic_index)
+        meta = index_meta(spark, semantic_index)
+        n_tables = D.EMBED_INDEX_TABLES if meta is None else meta["n_tables"]
         rows, overflow = split_capped_bands(
             _embed_bucket_rows(hash_embed(todo), n_tables),
             existing,
@@ -605,8 +607,8 @@ def run_document_stream(
         rows.write.mode("append").parquet(f"{semantic_index}/buckets")
         if existing is None:
             # first creation defines the index geometry for every
-            # future probe and catch-up (embedding_index_tables)
-            D.write_embedding_index_meta(spark, semantic_index, n_tables)
+            # future probe and catch-up (index_meta)
+            write_index_meta(spark, semantic_index, n_tables=n_tables)
         if overflow.limit(1).count():
             # same shape as materialize_embedding_lsh's excluded table;
             # width here = the rejected mass when the bucket first
@@ -630,7 +632,7 @@ def run_document_stream(
                     # the overflow twin shares the capped index's
                     # geometry (a probe at any other table count
                     # would silently miss its rows)
-                    D.write_embedding_index_meta(spark, over_path, n_tables)
+                    write_index_meta(spark, over_path, n_tables=n_tables)
                 new_over = overflow
                 if seen_over is not None:
                     new_over = overflow.join(
@@ -652,9 +654,14 @@ def run_document_stream(
         through the accumulated-width bucket cap (cap_new_bands)."""
         corpus_now = spark.read.parquet(output_dir).select("doc_id", "text")
         # the index's banding scheme governs both the probe
-        # (delta_match_pairs resolves it the same way) and every
-        # append; first creation below defines it
-        nh, nb = D.minhash_index_scheme(spark, near_dup_index)
+        # (delta_match_pairs reads it the same way) and every append;
+        # first creation below defines it
+        meta = index_meta(spark, near_dup_index)
+        nh, nb = (
+            (D.MINHASH_HASHES, D.MINHASH_BANDS)
+            if meta is None
+            else (meta["num_hashes"], meta["bands"])
+        )
 
         def _build_bands(d: DataFrame, existing: DataFrame | None) -> DataFrame:
             return cap_new_bands(
@@ -681,7 +688,7 @@ def run_document_stream(
                 todo = corpus_now
             build(todo, existing).write.mode("append").parquet(f"{near_dup_index}/{sub}")
         if created:
-            D.write_minhash_index_meta(spark, near_dup_index, nh, nb)
+            write_index_meta(spark, near_dup_index, num_hashes=nh, bands=nb)
 
     def _apply_policies(kept: DataFrame, seen: DataFrame | None, batch_id: int) -> DataFrame:
         """Streaming curation policies over one batch (see docstring):

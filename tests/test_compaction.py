@@ -160,11 +160,12 @@ def test_recover_swap_repairs_crashed_swap(spark, tmp_path):
 def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     """compact_lsh_index rewrites every sub-table of a streamed index
     (many per-batch append files -> few clustered files) without
-    changing a single probe verdict, and leaves the geometry meta
+    changing a single probe verdict, and leaves the geometry sidecar
     alone."""
     import os
 
     from solana_data_etl_pipeline_spark.operators import dedup as D
+    from solana_data_etl_pipeline_spark.operators.util import index_meta
     from solana_data_etl_pipeline_spark.sinks.compaction import compact_lsh_index
 
     path = str(tmp_path / "eidx")
@@ -212,8 +213,9 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
     assert "buckets" in summary and "excluded" in summary
     assert summary["buckets"]["after_files"] < files_before
     assert spark.read.parquet(f"{path}/buckets").count() == n_rows_before
-    # geometry meta untouched, probe verdicts identical
-    assert D.embedding_index_tables(spark, path) == 2
+    # geometry sidecar untouched, probe verdicts identical
+    assert "_index_meta" not in summary
+    assert index_meta(spark, path) == {"n_tables": 2}
     after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
     assert after == before
 
@@ -221,7 +223,7 @@ def test_compact_lsh_index_preserves_probes(spark, tmp_path):
 def test_compact_lsh_index_preserves_probes_tiny(spark, tmp_path):
     """Fast form of the test above: one appended batch of small files
     over a 12-vector index; compaction keeps every bucket row, the
-    geometry meta and the probe verdicts."""
+    geometry sidecar and the probe verdicts."""
     from pyspark.sql import functions as F
 
     from solana_data_etl_pipeline_spark.operators import dedup as D
@@ -231,6 +233,7 @@ def test_compact_lsh_index_preserves_probes_tiny(spark, tmp_path):
         norm_expr,
         table_bucket_col,
     )
+    from solana_data_etl_pipeline_spark.operators.util import index_meta
     from solana_data_etl_pipeline_spark.sinks.compaction import compact_lsh_index
 
     path = str(tmp_path / "eidx")
@@ -257,6 +260,7 @@ def test_compact_lsh_index_preserves_probes_tiny(spark, tmp_path):
     summary = compact_lsh_index(spark, path)
     assert summary["buckets"]["after_files"] < summary["buckets"]["before_files"]
     assert spark.read.parquet(f"{path}/buckets").count() == n_rows
-    assert D.embedding_index_tables(spark, path) == 2
+    assert "_index_meta" not in summary
+    assert index_meta(spark, path) == {"n_tables": 2}
     after = {r.vec_id for r in D.delta_embedding_dedup(spark, path, batch, threshold=0.99).collect()}
     assert after == before

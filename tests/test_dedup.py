@@ -8,6 +8,7 @@ import hashlib
 import pytest
 
 from solana_data_etl_pipeline_spark.operators import dedup as D
+from solana_data_etl_pipeline_spark.operators.util import index_meta
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -1186,8 +1187,8 @@ def test_embedding_index_geometry_is_self_describing(spark, tmp_path):
     default still matches on tables 0-1 (before the meta, probe
     tables 2-5 silently never matched and planted recall stayed at
     the 2-table point while the docstrings promised the 6-table
-    one); a legacy index without meta infers its count from the
-    bucket rows."""
+    one); without the sidecar the probe falls back to its
+    arguments."""
     import shutil
 
     path = str(tmp_path / "eidx")
@@ -1196,7 +1197,7 @@ def test_embedding_index_geometry_is_self_describing(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     D.materialize_embedding_lsh(emb, path, n_tables=2)
-    assert D.embedding_index_tables(spark, path) == 2
+    assert index_meta(spark, path) == {"n_tables": 2}
     # probe an EXACT copy of an indexed vector with the 6-table
     # default: resolution drops to the index's 2 tables and the dup
     # is caught (an unresolved 6-table probe would also catch it on
@@ -1207,11 +1208,17 @@ def test_embedding_index_geometry_is_self_describing(spark, tmp_path):
     )
     kept = D.delta_embedding_dedup(spark, path, batch, threshold=0.99)
     assert kept.count() == 0  # the exact twin is dropped
-    # legacy index: delete the meta, the count infers from bucket rows
-    shutil.rmtree(f"{path}/meta")
-    assert D.embedding_index_tables(spark, path) == 2
-    # nonexistent index: the default is the fallback
-    assert D.embedding_index_tables(spark, str(tmp_path / "nope")) == D.EMBED_INDEX_TABLES
+
+    def probe_tables(**kw):  # the exposure probe reports one row per table probed
+        return D.delta_embedding_exposure(spark, path, batch, **kw).first().n_buckets
+
+    assert probe_tables() == 2
+    # no sidecar: the probe falls back to its arguments
+    shutil.rmtree(f"{path}/_index_meta")
+    assert index_meta(spark, path) is None
+    assert probe_tables() == D.EMBED_INDEX_TABLES
+    assert probe_tables(n_tables=3) == 3
+    assert index_meta(spark, str(tmp_path / "nope")) is None
 
 
 def test_minhash_and_winnow_indexes_are_self_describing(spark, tmp_path):
@@ -1220,7 +1227,10 @@ def test_minhash_and_winnow_indexes_are_self_describing(spark, tmp_path):
     (8 bands x 2 rows) probed with default args resolves the INDEX's
     scheme (default-arg probing would compute disjoint band_sigs and
     silently match nothing); the winnow index does the same for its
-    (k, window)."""
+    (k, window). Without the sidecar each probe falls back to its
+    arguments."""
+    import shutil
+
     docs = spark.createDataFrame(
         [(i, f"shared words one two three four five six seven plus unique{i} filler{i}")
          for i in range(4)],
@@ -1228,14 +1238,28 @@ def test_minhash_and_winnow_indexes_are_self_describing(spark, tmp_path):
     )
     mpath = str(tmp_path / "midx")
     D.materialize_minhash(docs, mpath, num_hashes=16, bands=8)
-    assert D.minhash_index_scheme(spark, mpath) == (16, 8)
+    assert index_meta(spark, mpath) == {"num_hashes": 16, "bands": 8}
     delta = spark.createDataFrame([(100, docs.collect()[0].text)], "doc_id long, text string")
-    hits, _pairs = D.delta_match_pairs(spark, mpath, delta, threshold=0.9)
+
+    def minhash_hits(**kw):
+        hits, _pairs = D.delta_match_pairs(spark, mpath, delta, threshold=0.9, **kw)
+        return {(r.delta_id, r.corpus_id) for r in hits.collect()}
+
     # the exact twin verifies against the index despite default args
-    assert {(r.delta_id, r.corpus_id) for r in hits.collect()} == {(100, 0)}
+    assert minhash_hits() == {(100, 0)}
+    shutil.rmtree(f"{mpath}/_index_meta")
+    assert minhash_hits() == set()  # default scheme: disjoint band_sigs
+    assert minhash_hits(num_hashes=16, bands=8) == {(100, 0)}
 
     wpath = str(tmp_path / "widx")
     D.materialize_winnow(docs, wpath, k=4, window=3)
-    assert D.winnow_index_scheme(spark, wpath) == (4, 3)
-    got = D.delta_containment(spark, wpath, delta, threshold=0.9)
-    assert {(r.delta_id, r.corpus_id) for r in got.collect()} == {(100, 0)}
+    assert index_meta(spark, wpath) == {"k": 4, "window": 3}
+
+    def winnow_hits(**kw):
+        got = D.delta_containment(spark, wpath, delta, threshold=0.9, **kw)
+        return {(r.delta_id, r.corpus_id) for r in got.collect()}
+
+    assert winnow_hits() == {(100, 0)}
+    shutil.rmtree(f"{wpath}/_index_meta")
+    assert winnow_hits() == set()  # default scheme: disjoint fingerprints
+    assert winnow_hits(k=4, window=3) == {(100, 0)}

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from solana_data_etl_pipeline_spark.operators import similarity as V
+from solana_data_etl_pipeline_spark.operators.util import index_meta
 
 DIM = 8
 N = 40
@@ -176,7 +177,7 @@ def test_knn_lsh_indexed_identical_to_inline(emb, queries, tmp_path):
         ).collect()
     )
     assert inline == stored and inline  # identical, non-vacuous
-    # the PATH form resolves geometry from the _lsh_meta sidecar and
+    # the PATH form resolves geometry from the index_meta sidecar and
     # returns the same rows
     by_path = sorted(
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
@@ -195,7 +196,7 @@ def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_pat
 
     path = str(tmp_path / "lsh_rows")
     V.materialize_lsh_rows(emb, path, n_tables=2)
-    meta = V.lsh_index_meta(emb.sparkSession, path)
+    meta = index_meta(emb.sparkSession, path)
     assert meta == {"n_planes": V.LSH_PLANES, "dim": V.EMB_DIM, "n_tables": 2}
     # matching explicit value passes; conflicting value raises
     V.knn_lsh_indexed(path, queries, k=K, n_tables=2)
@@ -207,13 +208,35 @@ def test_knn_lsh_indexed_pins_probe_params_to_build_params(emb, queries, tmp_pat
     resolved = V.knn_lsh_indexed(path, queries, k=K)
     two = V.knn_lsh(emb, queries, k=K, n_tables=2)
     assert sorted(map(tuple, resolved.collect())) == sorted(map(tuple, two.collect()))
-    # a pre-meta legacy index (sidecar removed) keeps caller geometry
+    # a path without the sidecar has no geometry to pin: the PATH
+    # probe refuses it instead of guessing
     import shutil
 
-    shutil.rmtree(f"{path}/_lsh_meta")
-    assert V.lsh_index_meta(emb.sparkSession, path) is None
-    legacy = V.knn_lsh_indexed(path, queries, k=K, n_tables=2)
-    assert sorted(map(tuple, legacy.collect())) == sorted(map(tuple, two.collect()))
+    shutil.rmtree(f"{path}/_index_meta")
+    assert index_meta(emb.sparkSession, path) is None
+    with _pytest.raises(ValueError, match="materialize_lsh_rows"):
+        V.knn_lsh_indexed(path, queries, k=K, n_tables=2)
+
+
+def test_knn_lsh_indexed_path_keeps_min_long_query_ids(emb, queries, tmp_path):
+    """The PATH probe's dynamic-partition-pruning trigger is result-
+    neutral over the whole long domain: a query id below -2^62 gets
+    the same rows as through the DataFrame form, and the probe scan
+    is still partition-pruned."""
+    path = str(tmp_path / "lsh_rows")
+    V.materialize_lsh_rows(emb, path)
+    low = -(1 << 62) - 5
+    q = queries.withColumn(
+        "query_id",
+        F.when(F.col("query_id") == 0, F.lit(low)).otherwise(F.col("query_id")),
+    )
+    by_path = V.knn_lsh_indexed(path, q, k=K)
+    plan = by_path._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruningexpression" in plan.lower()
+    got = sorted(map(tuple, by_path.collect()))
+    rows = emb.sparkSession.read.parquet(path)
+    assert got == sorted(map(tuple, V.knn_lsh_indexed(rows, q, k=K).collect()))
+    assert low in {r[0] for r in got}
 
 
 def test_knn_lsh_multi_table_candidates_superset_and_dedup(emb, queries):
